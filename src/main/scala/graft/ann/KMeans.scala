@@ -84,54 +84,55 @@ object KMeans {
     // same): without it every iteration re-scans the source and
     // re-decodes the vectors through the encoder, `iters` + 1 times.
     // MEMORY_AND_DISK so a corpus bigger than storage spills instead
-    // of failing; unpersisted before returning.
+    // of failing; unpersisted on every exit, failure included.
     val corp = df.select(col(vecCol)).where(col(vecCol).isNotNull).as[Array[Float]]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val d = cents.head.length
-    var it = 0
-    while (it < iters) {
-      val bc = spark.sparkContext.broadcast(Model(cents))
-      // one narrow pass: k x d partial sums + counts per partition.
-      // Partials are COLLECTED (ordered by partition id) and merged on
-      // the driver in that fixed order — Dataset.reduce would merge in
-      // task-completion order, making the float sums (and so the
-      // centroids) vary in ulps run to run. k x d x P doubles is
-      // driver-trivial for any sane quantizer size.
-      val partials = corp
-        .mapPartitions { rows =>
-          val m = bc.value
-          val acc = Array.fill(m.k)(new Array[Double](d))
-          val cnt = new Array[Long](m.k)
-          rows.foreach { v =>
-            val c = m.assign(v)
-            val a = acc(c)
-            var j = 0
-            val n = math.min(d, v.length)
-            while (j < n) { a(j) += v(j); j += 1 }
-            cnt(c) += 1L
+    try {
+      var it = 0
+      while (it < iters) {
+        val bc = spark.sparkContext.broadcast(Model(cents))
+        // one narrow pass: k x d partial sums + counts per partition.
+        // Partials are COLLECTED (ordered by partition id) and merged on
+        // the driver in that fixed order — Dataset.reduce would merge in
+        // task-completion order, making the float sums (and so the
+        // centroids) vary in ulps run to run. k x d x P doubles is
+        // driver-trivial for any sane quantizer size.
+        val partials = corp
+          .mapPartitions { rows =>
+            val m = bc.value
+            val acc = Array.fill(m.k)(new Array[Double](d))
+            val cnt = new Array[Long](m.k)
+            rows.foreach { v =>
+              val c = m.assign(v)
+              val a = acc(c)
+              var j = 0
+              val n = math.min(d, v.length)
+              while (j < n) { a(j) += v(j); j += 1 }
+              cnt(c) += 1L
+            }
+            Iterator.single((acc, cnt))
           }
-          Iterator.single((acc, cnt))
+          .collect()
+        val sums = Array.fill(cents.length)(new Array[Double](d))
+        val counts = new Array[Long](cents.length)
+        for ((acc, cnt) <- partials) {
+          var i = 0
+          while (i < sums.length) {
+            var j = 0
+            while (j < d) { sums(i)(j) += acc(i)(j); j += 1 }
+            counts(i) += cnt(i)
+            i += 1
+          }
         }
-        .collect()
-      val sums = Array.fill(cents.length)(new Array[Double](d))
-      val counts = new Array[Long](cents.length)
-      for ((acc, cnt) <- partials) {
-        var i = 0
-        while (i < sums.length) {
-          var j = 0
-          while (j < d) { sums(i)(j) += acc(i)(j); j += 1 }
-          counts(i) += cnt(i)
-          i += 1
+        cents = Array.tabulate(cents.length) { i =>
+          if (counts(i) == 0L) cents(i) // empty cluster: keep previous
+          else Array.tabulate(d)(j => (sums(i)(j) / counts(i)).toFloat)
         }
+        bc.destroy()
+        it += 1
       }
-      cents = Array.tabulate(cents.length) { i =>
-        if (counts(i) == 0L) cents(i) // empty cluster: keep previous
-        else Array.tabulate(d)(j => (sums(i)(j) / counts(i)).toFloat)
-      }
-      bc.destroy()
-      it += 1
-    }
-    corp.unpersist()
+    } finally corp.unpersist()
     Model(cents)
   }
 

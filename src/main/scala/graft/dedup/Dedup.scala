@@ -101,11 +101,11 @@ object Dedup {
     // instead of persisting the shingle sets between consumers. A
     // persist would pin |corpus| wide array rows in executor storage
     // through Spark's slow non-columnar cache path (measured ~10x a
-    // recompute for nested rows — see KGPipeline's persistIntermediate
-    // note); at 10^12-doc scale the right form is a staging parquet of
-    // (id, shingles) that both branches scan, which is what
-    // persistIntermediate-style staging would do. Shingling itself is a
-    // narrow codegen-adjacent map, so recompute stays the default here.
+    // recompute for nested rows — the reason KGPipeline.run does not
+    // cache its extraction either); at 10^12-doc scale the right form
+    // is a staging parquet of (id, shingles) that both branches scan.
+    // Shingling itself is a narrow codegen-adjacent map, so recompute
+    // stays the default here.
     val shingled = df.select(
       col(idCol).cast("long").as("id"),
       graft.functions.TextExpressions

@@ -25,13 +25,13 @@ import graft.util.Hashing
 object TextExpressions {
 
   /** THE word-shingle kernel (identical semantics to the original
-    * `Dedup.wordShingles`, which now delegates here): lowercase,
-    * whitespace-tokenize, hash each n-gram with [[Hashing.hashString]],
-    * keep first-occurrence-distinct hashes. Public + static so
+    * `Dedup.wordShingles`, which now delegates here): lowercase in
+    * Locale.ROOT, whitespace-tokenize, hash each n-gram with
+    * [[Hashing.hashString]], keep first-occurrence-distinct hashes. Public + static so
     * generated code can call it.
     */
   def wordShinglesArr(text: String, n: Int): Array[Long] = {
-    val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+    val toks = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
     if (toks.length < n) Array(Hashing.hashString(toks.mkString(" ")))
     else (0 to toks.length - n).map(i => Hashing.hashString(toks.slice(i, i + n).mkString(" "))).distinct.toArray
   }
@@ -137,8 +137,11 @@ object TextExpressions {
     java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** `Repetition.units(text, unitSep)` replayed in one compiled pass:
-    * lower (Locale.ROOT == UTF8String.toLowerCase), regex split with
-    * limit -1 (Spark split default), space-only trim, drop empties.
+    * lower in Locale.ROOT, regex split with limit -1 (Spark split
+    * default), space-only trim, drop empties. The lowering equals SQL
+    * lower() on ASCII text only: on non-ASCII text
+    * UTF8String.toLowerCase uses the JVM's default locale, so the two
+    * can differ under a tr/az/lt default.
     */
   def unitsKernel(text: String, sep: java.util.regex.Pattern): Array[String] = {
     val parts = sep.split(text.toLowerCase(java.util.Locale.ROOT), -1)

@@ -1,27 +1,28 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.model.LinkEdge
 import graft.util.Hashing._
 
-/** MinHash-LSH candidate blocking + exact Jaccard link scoring.
+/** MinHash-LSH candidate blocking + exact token-similarity link scoring.
   *
   * Graft of the reference's two-phase overlap detection: KD-tree
-  * blocking (/root/reference/src/OverlappingSegmentsUtils.jl:144-153)
-  * followed by exact discrete-Fréchet scoring
-  * (/root/reference/src/Utils.jl:256-276). Here the blocking is
-  * MinHash banding over character shingles (Broder 1997; Leskovec et
-  * al., "Mining of Massive Datasets" ch.3) and the exact scorer is
-  * Jaccard over the same shingle sets.
+  * blocking (OverlappingSegmentsUtils.jl) followed by exact
+  * discrete-Fréchet scoring (Utils.jl). Here the blocking is MinHash
+  * banding over character shingles (Broder 1997; Leskovec et al.,
+  * "Mining of Massive Datasets" ch.3) plus a deterministic prefix
+  * channel, and the exact scorer is [[tokenSim]].
   *
-  * Scale shape: input is the *distinct surface vocabulary* (10^6-10^8
-  * rows at 10^12-turn scale, NOT the turn stream). One narrow shuffle
-  * on the (band, bandHash) key produces candidates; scoring is a
-  * map-side exact check on the joined rows. Hot buckets (stopword-like
-  * surfaces) are capped by the band hash width; AQE skew-join handles
-  * residual skew.
+  * Both paths run bucket → pairs → score: each surface is signed once
+  * into its blocking keys, the surfaces sharing a key form a bucket,
+  * [[bucketPairs]] turns a bucket into candidate pairs, and each
+  * distinct pair is scored once. Scale shape: input is the *distinct
+  * surface vocabulary* (10^6-10^8 rows at 10^12-turn scale, NOT the
+  * turn stream).
   */
 object Linker {
 
@@ -63,11 +64,12 @@ object Linker {
   private val WsPattern = java.util.regex.Pattern.compile("\\s+")
   private val NonAlnumPattern = java.util.regex.Pattern.compile("[^a-z0-9]+")
 
-  /** Normalized character k-shingles. Case-folded and
+  /** Normalized character k-shingles, distinct. Case-folded (in
+    * Locale.ROOT, so the JVM locale cannot change them) and
     * whitespace-collapsed so case variants are shingle-identical.
     */
   def shingles(s: String, k: Int): Array[Long] = {
-    val n = WsPattern.matcher(s.toLowerCase).replaceAll(" ").trim
+    val n = WsPattern.matcher(s.toLowerCase(java.util.Locale.ROOT)).replaceAll(" ").trim
     if (n.length < k) Array(hashString(n))
     else {
       val set = scala.collection.mutable.LongMap.empty[Unit]
@@ -120,6 +122,23 @@ object Linker {
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
+  /** [[exactJaccard]] of two sorted, duplicate-free arrays, by counting
+    * the intersection in one merge pass. Same counts, same division, so
+    * the result equals exactJaccard's bit for bit.
+    */
+  private def sortedJaccard(a: Array[Long], b: Array[Long]): Double = {
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { inter += 1; i += 1; j += 1 }
+    }
+    val union = a.length + b.length - inter
+    if (union == 0) 1.0 else inter.toDouble / union
+  }
+
   /** IDF-weighted Jaccard: sum of shingle weights over the
     * intersection / union. Downweights shingles that are frequent
     * across the vocabulary (e.g. the "Systems"/"Inc" suffix problem:
@@ -148,7 +167,7 @@ object Linker {
     Set("the", "inc", "corp", "ltd", "llc", "co", "gmbh")
 
   def tokensOf(s: String): Array[String] =
-    NonAlnumPattern.split(s.toLowerCase).filter(t => t.nonEmpty && !StopTokens(t))
+    NonAlnumPattern.split(s.toLowerCase(java.util.Locale.ROOT)).filter(t => t.nonEmpty && !StopTokens(t))
 
   /** Entity-link score: MIN over informative tokens (both sides) of the
     * token's best match on the other side, where a token matches by
@@ -167,7 +186,9 @@ object Linker {
 
   /** tokenSim over pre-split token arrays with a caller-provided
     * shingle memo (tokens repeat heavily across candidate pairs — a
-    * per-partition memo removes ~all shingle recomputation).
+    * per-partition memo removes ~all shingle recomputation). The memo
+    * holds each token's shingles sorted, so a token pair's Jaccard is
+    * one merge pass ([[sortedJaccard]]) instead of a boxed Set per call.
     */
   def tokenSimArr(
       ta: Array[String],
@@ -175,7 +196,8 @@ object Linker {
       shingleMemo: collection.mutable.HashMap[String, Array[Long]]
   ): Double = {
     if (ta.isEmpty || tb.isEmpty) return if (ta.isEmpty && tb.isEmpty) 1.0 else 0.0
-    def sh(t: String): Array[Long] = shingleMemo.getOrElseUpdate(t, shingles(t, 3))
+    def sh(t: String): Array[Long] =
+      shingleMemo.getOrElseUpdate(t, { val a = shingles(t, 3); java.util.Arrays.sort(a); a })
     def one(t: String, other: Array[String]): Double = {
       var best = 0.0
       var i = 0
@@ -185,7 +207,7 @@ object Linker {
           if (t == o) 1.0
           else if (math.min(t.length, o.length) >= 4 &&
             (t.startsWith(o) || o.startsWith(t))) 0.9
-          else exactJaccard(sh(t), sh(o))
+          else sortedJaccard(sh(t), sh(o))
         if (s > best) best = s
         i += 1
       }
@@ -197,28 +219,6 @@ object Linker {
     i = 0
     while (i < tb.length) { mn = math.min(mn, one(tb(i), ta)); i += 1 }
     mn
-  }
-
-  /** IDF weights over the vocabulary's shingles. The char-k-gram space
-    * is tiny (<< 10^6 distinct even at 10^8 surfaces), so the DF table
-    * is computed distributed and always collected + broadcast.
-    */
-  def idfWeights(
-      spark: SparkSession,
-      surfaces: DataFrame, // columns: surface: String
-      cfg: LshConfig
-  ): Map[Long, Double] = {
-    import spark.implicits._
-    val n = surfaces.count().toDouble
-    surfaces
-      .select($"surface".cast("string"))
-      .as[String]
-      .flatMap(s => shingles(s, cfg.shingleK).distinct)
-      .groupByKey(identity)
-      .count()
-      .collect()
-      .map { case (sh, df) => sh -> math.log(1.0 + n / df.toDouble) }
-      .toMap
   }
 
   /** The deterministic second blocking channel (multi-pass blocking,
@@ -250,15 +250,44 @@ object Linker {
     if (toks.isEmpty) bands else bands :+ prefixKey(toks)
   }
 
+  /** Candidate pairs of one blocking bucket: each pair of distinct
+    * ids as (lower, higher), or none when the bucket holds fewer than two
+    * or more than `maxBucketSize` ids (the hot-bucket cap, see
+    * [[LshConfig]]). The one pair generator of both link paths.
+    */
+  def bucketPairs(ids: Array[Long], maxBucketSize: Int): Iterator[(Long, Long)] =
+    if (ids.length < 2 || ids.length > maxBucketSize) Iterator.empty
+    else
+      for {
+        a <- Iterator.range(0, ids.length)
+        b <- Iterator.range(a + 1, ids.length)
+        if ids(a) != ids(b)
+      } yield if (ids(a) < ids(b)) (ids(a), ids(b)) else (ids(b), ids(a))
+
+  /** A bucket's ids, keeping at most `cap + 1`: enough for
+    * [[bucketPairs]] to tell a kept bucket from a capped one. Partial
+    * buffers merge under the same bound, so no task holds more than
+    * `cap + 1` ids of a hot bucket.
+    */
+  private final class CappedIds(cap: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
+    def zero: Array[Long] = Array.emptyLongArray
+    def reduce(buf: Array[Long], id: Long): Array[Long] = if (buf.length > cap) buf else buf :+ id
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] =
+      if (a.length > cap) a else if (b.length > cap) b else (a ++ b).take(cap + 1)
+    def finish(buf: Array[Long]): Array[Long] = buf
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
   /** Candidate link edges among `surfaces` (id, surface).
     *
-    * Plan: one row per (surface, channel) with the channel's key
-    * (computed in the signing mapPartitions — pure Scala, identical to
-    * the driver-local fast path) → self equi-join on (band, bh) →
-    * distinct (src < dst) pairs → exact scorer filter. The join is an
-    * equi-join Catalyst plans as a shuffled hash join; the theta part
-    * (score >= t) is a residual map-side filter — the same
-    * broad/narrow split the reference hand-rolls.
+    * Plan: one signing pass emits (band, key, id) per blocking channel
+    * → groupBy(band, key) collects each bucket's ids, capped at
+    * `maxBucketSize + 1` ([[CappedIds]]) → [[bucketPairs]] →
+    * distinct pairs (a pair can collide in several bands) → each
+    * side's tokens joined in by id, for candidates only → exact scorer
+    * filter. Shuffles: the bucket aggregate, the pair dedup and the two
+    * token joins (broadcast while the vocabulary is small).
     */
   def linkEdges(
       spark: SparkSession,
@@ -266,99 +295,70 @@ object Linker {
       cfg: LshConfig = LshConfig()
   ): Dataset[LinkEdge] = {
     import spark.implicits._
-
-    val withKeys = surfaces
-      .select($"id".cast("long"), $"surface".cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, s) =>
-          // tokenize once per surface; pairs downstream reuse the arrays
-          val toks = tokensOf(s)
-          (id, toks, blockingKeys(toks, signature(shingles(s, cfg.shingleK), cfg), cfg))
-        }
+    val named = surfaces.select($"id".cast("long"), $"surface".cast("string")).as[(Long, String)]
+    val pairs = named
+      .flatMap { case (id, s) =>
+        val keys = blockingKeys(tokensOf(s), signature(shingles(s, cfg.shingleK), cfg), cfg)
+        keys.indices.map(b => (b, keys(b), id))
       }
-      .toDF("id", "toks", "keys")
-
-    val banded = withKeys
-      .select($"id", $"toks", posexplode($"keys").as(Seq("band", "bh")))
-
-    // drop hot buckets before the self-join (see maxBucketSize doc)
-    val keepBuckets = banded
+      .toDF("band", "bh", "id")
       .groupBy($"band", $"bh")
-      .agg(count(lit(1)).as("sz"))
-      .where($"sz" <= cfg.maxBucketSize && $"sz" > 1)
-      .select($"band", $"bh")
-    val pruned = banded.join(keepBuckets, Seq("band", "bh"), "left_semi")
+      .agg(udaf(new CappedIds(cfg.maxBucketSize), Encoders.scalaLong)($"id").as("ids"))
+      .select($"ids")
+      .as[Array[Long]]
+      .flatMap(bucketPairs(_, cfg.maxBucketSize))
+      .toDF("src", "dst")
+      .distinct()
 
-    val l = pruned.select($"band", $"bh", $"id".as("src"), $"toks".as("t_a"))
-    val r = pruned.select($"band", $"bh", $"id".as("dst"), $"toks".as("t_b"))
-
-    val scored = l
-      .join(r, Seq("band", "bh"))
-      .where($"src" < $"dst")
-      // a pair can collide in several bands — dedup before scoring so
-      // the exact scorer runs once per pair
-      .groupBy($"src", $"dst")
-      .agg(first($"t_a").as("t_a"), first($"t_b").as("t_b"))
+    val toks = named.map { case (id, s) => (id, tokensOf(s)) }
+    pairs
+      .join(toks.toDF("src", "t_a"), "src")
+      .join(toks.toDF("dst", "t_b"), "dst")
+      .select($"src", $"dst", $"t_a", $"t_b")
       .as[(Long, Long, Array[String], Array[String])]
       .mapPartitions { it =>
         val memo = collection.mutable.HashMap.empty[String, Array[Long]]
         it.map { case (s, d, a, b) => LinkEdge(s, d, tokenSimArr(a, b, memo)) }
       }
       .filter(_.score >= cfg.jaccardThreshold)
-
-    scored
   }
 
-  /** Driver-local linkEdges fast path for broadcast-sized vocabularies
-    * (the reference's own in-memory regime; same dispatch idea as
+  /** Driver-local linkEdges for broadcast-sized vocabularies (the
+    * reference's own in-memory regime; same dispatch idea as
     * [[graft.canon.ConnectedComponents]]' driver-local union-find). The
-    * blocking keys, hot-bucket cap and scorer are the SAME functions
+    * blocking keys, [[bucketPairs]] and scorer are the SAME functions
     * the distributed plan uses, so the produced link set is identical —
-    * property-tested in LinkerLocalSpec. Replaces ~8 tiny Spark jobs
-    * with one in-memory pass: at an 18M-turn/3.6k-surface proxy run the
-    * distributed mapping cost ~3 s of fixed job overhead at 32 cores —
-    * pure ceiling loss, since linking cost depends on |dict|, not
-    * |turns|.
+    * property-tested in LinkerLocalSpec. It saves the distributed
+    * plan's fixed job overhead, since linking cost depends on |dict|,
+    * not |turns|.
     */
-  def linkEdgesLocal(
-      surfaces: Seq[(Long, String)],
-      cfg: LshConfig = LshConfig()
-  ): Seq[LinkEdge] = {
-    val n = surfaces.length
-    val ids = new Array[Long](n)
-    val toksArr = new Array[Array[String]](n)
-    val buckets = collection.mutable.HashMap.empty[(Int, Long), collection.mutable.ArrayBuffer[Int]]
-    var i = 0
+  def linkEdgesLocal(surfaces: Seq[(Long, String)], cfg: LshConfig = LshConfig()): Seq[LinkEdge] = {
+    // ids ranked in ascending order: a rank pair packs into one long
+    // whose primitive sort orders and deduplicates the pairs by id
+    val ids = surfaces.map(_._1).distinct.sorted.toArray
+    val rank = ids.zipWithIndex.toMap
+    val toks = new Array[Array[String]](ids.length)
+    val buckets = collection.mutable.HashMap.empty[(Int, Long), collection.mutable.ArrayBuffer[Long]]
     for ((id, s) <- surfaces) {
-      ids(i) = id
-      toksArr(i) = tokensOf(s)
-      val keys = blockingKeys(toksArr(i), signature(shingles(s, cfg.shingleK), cfg), cfg)
-      var b = 0
-      while (b < keys.length) {
-        buckets.getOrElseUpdate((b, keys(b)), collection.mutable.ArrayBuffer.empty) += i
-        b += 1
-      }
-      i += 1
+      val r = rank(id)
+      toks(r) = tokensOf(s)
+      val keys = blockingKeys(toks(r), signature(shingles(s, cfg.shingleK), cfg), cfg)
+      for (b <- keys.indices)
+        buckets.getOrElseUpdate((b, keys(b)), collection.mutable.ArrayBuffer.empty) += r.toLong
     }
-    val pairs = collection.mutable.HashSet.empty[(Long, Long)]
-    for ((_, buf) <- buckets if buf.size > 1 && buf.size <= cfg.maxBucketSize) {
-      var a = 0
-      while (a < buf.size) {
-        var b = a + 1
-        while (b < buf.size) {
-          val (ia, ib) = (ids(buf(a)), ids(buf(b)))
-          if (ia != ib) pairs += (if (ia < ib) (ia, ib) else (ib, ia))
-          b += 1
-        }
-        a += 1
-      }
-    }
-    val byId = surfaces.indices.map(j => ids(j) -> j).toMap
+    val pairs = buckets.valuesIterator
+      .flatMap(buf => bucketPairs(buf.toArray, cfg.maxBucketSize))
+      .map { case (a, b) => a << 32 | b }
+      .toArray
+    java.util.Arrays.sort(pairs)
     val memo = collection.mutable.HashMap.empty[String, Array[Long]]
-    pairs.toSeq.sortBy(identity).flatMap { case (src, dst) =>
-      val score = tokenSimArr(toksArr(byId(src)), toksArr(byId(dst)), memo)
-      if (score >= cfg.jaccardThreshold) Some(LinkEdge(src, dst, score)) else None
-    }
+    pairs.indices.iterator
+      .filter(i => i == 0 || pairs(i - 1) != pairs(i))
+      .flatMap { i =>
+        val (a, b) = ((pairs(i) >>> 32).toInt, pairs(i).toInt)
+        val score = tokenSimArr(toks(a), toks(b), memo)
+        if (score >= cfg.jaccardThreshold) Some(LinkEdge(ids(a), ids(b), score)) else None
+      }
+      .toSeq
   }
 }

@@ -18,8 +18,10 @@ import graft.model.{EdgeRow, Turn, VertexRow}
   *
   * Shuffle inventory (what the 100-TB plan pays for):
   *   - extraction: none (narrow mapPartitions over the scan)
-  *   - linking: over the surface VOCABULARY (|dict|, not |turns|):
-  *     one band-key shuffle + one pair-dedup shuffle + CC rounds
+  *   - linking: over the surface VOCABULARY (|dict|, not |turns|), and
+  *     only above DriverLocalLinkThreshold: one bucket-aggregate shuffle
+  *     on the blocking key, one pair-dedup shuffle, two token-by-id joins
+  *     (broadcast while |dict| is small), then CC rounds
   *   - canonicalization joins on triples: broadcast when the mapping is
   *     small (it is: |dict| rows); shuffled-hash otherwise, and the
   *     subj/obj joins reuse one partitioning
@@ -37,14 +39,15 @@ object KGPipeline {
   )
 
   /** Below this vocabulary size the linking runs driver-local (the
-    * reference's own in-memory regime): the distributed mapping is ~8
-    * tiny jobs whose fixed overhead (~3 s at 32 cores) is pure ceiling
-    * loss when |dict| is broadcast-sized anyway. Both paths share the
-    * blocking/scoring functions and are property-tested equal. 20k is
-    * deliberately conservative — the local path is single-threaded and
-    * its pair space is bounded by buckets x cap^2, so a collision-heavy
-    * 10^5-surface vocabulary could stall a driver; measured cost at
-    * 3.6k surfaces is ~100 ms.
+    * reference's own in-memory regime): the distributed plan pays ~4
+    * Spark jobs of fixed overhead, pure ceiling loss when |dict| is
+    * broadcast-sized anyway. Both paths share the blocking, pair and
+    * scoring functions and are property-tested equal. Measured on 4
+    * cores (local[4]): 2,400 surfaces link in ~0.1 s locally vs ~1.0 s
+    * distributed, 20,400 in ~1.9 s vs ~2.6 s. The local path is
+    * single-threaded and its pair space is bounded only by buckets x
+    * cap^2, so the threshold stays conservative: a collision-heavy
+    * 10^5-surface vocabulary could stall a driver.
     */
   val DriverLocalLinkThreshold: Int = 20000
 
@@ -77,7 +80,6 @@ object KGPipeline {
       turns: Dataset[Turn],
       dict: Seq[SurfaceForm],
       lsh: Linker.LshConfig = Linker.LshConfig(),
-      persistIntermediate: Boolean = false,
       persistSource: Boolean = false
   ): Result = {
     import spark.implicits._
@@ -96,19 +98,13 @@ object KGPipeline {
       if (persistSource)
         validTurns0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else validTurns0
-    val extraction0 = Mentions.extract(spark, validTurns, bc)
-    // Both output tables consume the extraction (edges need triples,
-    // vertices need the observed-mention vocabulary). Default is to
-    // RECOMPUTE it per consumer: the extraction is a cheap narrow map
-    // (~2M turns/s/8 cores), while caching 10^7+ rows of nested
-    // array<struct> takes Spark's slow non-columnar cache path and
-    // measured ~10x the cost of a second scan. Opt into the cache only
-    // for small corpora with many downstream consumers; at 10^12-turn
-    // scale the equivalent is a staging parquet/Iceberg table.
-    val extraction =
-      if (persistIntermediate)
-        extraction0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else extraction0
+    // Edges consume the extraction's triples; vertices consume only the
+    // observed ids, from their own narrow scan. The extraction is not
+    // cached: it is a cheap narrow map (~2M turns/s/8 cores), while
+    // caching 10^7+ rows of nested array<struct> takes Spark's slow
+    // non-columnar cache path and measured ~10x the cost of a second
+    // scan. At 10^12-turn scale the equivalent is a staging table.
+    val extraction = Mentions.extract(spark, validTurns, bc)
 
     val rawTriples = extraction
       .select($"conv_id", $"turn_idx", explode($"triples").as("t"))
@@ -133,14 +129,10 @@ object KGPipeline {
 
     // vertices: canonical groups of the dictionary, restricted to
     // surfaces actually observed in the corpus (distinct over the
-    // mention vocabulary — small — not over the turn stream). When the
-    // extraction is cached, read the ids off it; otherwise use the
-    // dedicated narrow observed-ids scan instead of re-running the full
-    // extraction just to throw away everything but the ids.
-    val observed =
-      if (persistIntermediate)
-        extraction.select(explode($"mentions.entity_id").as("id")).distinct()
-      else Mentions.observedIds(spark, validTurns, bc).toDF("id")
+    // mention vocabulary — small — not over the turn stream), read by
+    // the dedicated narrow observed-ids scan instead of re-running the
+    // full extraction just to throw away everything but the ids.
+    val observed = Mentions.observedIds(spark, validTurns, bc).toDF("id")
     val dictDf = spark
       .createDataset(dict.map(s => (s.surfaceId, s.surface, s.entityType)))
       .toDF("id", "surface", "etype")
