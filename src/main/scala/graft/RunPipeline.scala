@@ -89,8 +89,8 @@ object RunPipeline {
     val result = KGPipeline.run(spark, turns, dict)
     val written = Materialize.writeEdges(spark, result.edges.toDF(), outDir, numBuckets)
     Materialize.writeVertices(result.vertices.toDF(), outDir)
-    Materialize.writeManifest(spark, outDir)
     val (v, e) = Materialize.stats(spark, outDir)
+    Materialize.writeManifest(spark, outDir, Some((v, e)))
     (v, e, written)
   }
 

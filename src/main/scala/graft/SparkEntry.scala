@@ -76,7 +76,7 @@ object SparkEntry {
     * mutation to make the dup rules decide both ways. Mirrored by the
     * ngram oracle's ndocs CTE.
     */
-  private[graft] def injectedRepeats(s: SparkSession, dir: String): DataFrame = {
+  private def injectedRepeats(s: SparkSession, dir: String): DataFrame = {
     val head12 = concat_ws(" ", slice(split(col("text"), " "), 1, 12))
     val r1 = when(col("doc_id") % 3 === 0, concat(col("text"), lit(" "), head12))
       .otherwise(col("text"))
@@ -103,11 +103,12 @@ object SparkEntry {
   }
 
   /** IVF recall@5 floor (q_ann_ivf_recall_guard). Measured sweep
-    * (tools/ApproxParityProbe, shipped nProbe=8/kmeansIters=5 config):
-    * recall plateaus ~0.8 on both driver corpora — the synthetic
-    * embeddings have weak cluster structure, the worst case for a
-    * coarse quantizer. Floor set with headroom below the measured
-    * minimum so the row guards regressions, not sampling noise.
+    * (tools/ApproxParityProbe at commit 5b261a9, shipped
+    * nProbe=8/kmeansIters=5 config): recall plateaus ~0.8 on both
+    * sf0.01 and sf0.1 corpora — the synthetic embeddings have weak cluster
+    * structure, the worst case for a coarse quantizer. Floor set with
+    * headroom below the measured minimum so the row guards regressions,
+    * not sampling noise.
     */
   private val IvfRecallFloor = 0.75
 
@@ -116,8 +117,9 @@ object SparkEntry {
     * approx_count_distinct default rsd is 0.05 (HLL++, Heule et al.
     * 2013); the max over the ~dozens of independent per-cell estimates
     * is a max of ~|N(0, 0.05)| draws, so 3 sigma = 0.15 bounds it with
-    * overwhelming probability. Measured (tools/ApproxParityProbe):
-    * 0.054 at sf0.01, 0.092 at sf0.1 — inside the bound with headroom.
+    * overwhelming probability. Measured (tools/ApproxParityProbe at
+    * commit 5b261a9): 0.054 at sf0.01, 0.092 at sf0.1 — inside the
+    * bound with headroom.
     * (Unrestricted over all cells the metric is meaningless: tiny cells
     * hit 0.25 from single-integer estimate granularity.)
     */
@@ -147,15 +149,22 @@ object SparkEntry {
     memoized(kgCache, s, dir) {
       val cfg = genConfigFor(dir)
       val dict = Dictionary.build(cfg.seed, cfg.numEntities)
-      // persistSource: the bench corpus is generated and sf-sized —
-      // pinning the flat turn rows pays one generation for the two
-      // full-stream passes (extraction + observed-ids); a 100-TB run
-      // reads a source table instead and keeps the default
-      val r = KGPipeline.run(s, TranscriptGen.transcripts(s, cfg), dict, persistSource = true)
-      // several kg_* queries consume the materialized graph — cache the
-      // (small, canonical) output tables, not the turn-stream
-      // intermediates; mirrors reading back the written tables
-      KGPipeline.Result(r.vertices.cache(), r.edges.cache(), r.mapping)
+      // the corpus is generated and sf-sized: pinning the turn rows
+      // pays one generation for the pipeline's two full-stream passes
+      // (extraction + observed-ids). The pin lives only until both
+      // cached output tables are materialized.
+      val turns = TranscriptGen.transcripts(s, cfg)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val r = KGPipeline.run(s, turns, dict)
+        // several kg_* queries consume the materialized graph — cache the
+        // (small, canonical) output tables, not the turn-stream
+        // intermediates; mirrors reading back the written tables
+        val res = KGPipeline.Result(r.vertices.cache(), r.edges.cache(), r.mapping)
+        res.vertices.count()
+        res.edges.count()
+        res
+      } finally turns.unpersist()
     }
 
   /** The cached edge table re-read through a size-derived coalesce for
@@ -257,7 +266,7 @@ object SparkEntry {
     * q_neardup_survivors and their DuckDB oracle mirrors — keep the
     * expression and the SQL in lockstep.
     */
-  private[graft] def docsWithClips(s: SparkSession, dir: String): DataFrame =
+  private def docsWithClips(s: SparkSession, dir: String): DataFrame =
     docsWithClipsLang(s, dir).select(col("doc_id"), col("text"))
 
   /** The clips corpus carrying the lang stratum (the near-dup curation
@@ -267,7 +276,7 @@ object SparkEntry {
     * q_jaccard_pairs / q_neardup_survivors / q_curate_neardup oracle
     * SQL.
     */
-  private[graft] def docsWithClipsLang(s: SparkSession, dir: String): DataFrame = {
+  private def docsWithClipsLang(s: SparkSession, dir: String): DataFrame = {
     val d = read(s, dir, "documents").select(col("doc_id"), col("text"), col("lang"))
     val clipped = d
       .where(col("doc_id") % 4 === 0)
@@ -798,8 +807,8 @@ object SparkEntry {
     //      NearDupStage.MinHashLsh defaults): containment must hold by
     //      construction (LSH pairs ⊆ exact pairs — exact re-scoring),
     //      and the removal recall must clear the measured floor
-    //      (LshGuardProbe: 1.0 at sf0.01, 0.99917 at sf0.1 — floor
-    //      0.95) with the stage non-vacuous.
+    //      (tools/LshGuardProbe at commit 5b261a9: 1.0 at sf0.01,
+    //      0.99917 at sf0.1 — floor 0.95) with the stage non-vacuous.
     "q_curate_lsh_guard" -> ((s, dir) => {
       import s.implicits._
       import org.apache.spark.storage.StorageLevel
@@ -942,9 +951,10 @@ object SparkEntry {
 
     // ---- ANN: IVF (inverted-file) variant (rows-only; spec-verified).
     //      Shipped config nProbe=8/kmeansIters=5 chosen by sweep
-    //      (tools/ApproxParityProbe): recall@5 plateaus there on the
-    //      driver corpora — the synthetic embeddings have weak cluster
-    //      structure, so IVF recall < 1.0 at any fixed nProbe < lists
+    //      (tools/ApproxParityProbe at commit 5b261a9): recall@5
+    //      plateaus there on the sf0.01/sf0.1 corpora — the synthetic
+    //      embeddings have weak cluster structure, so IVF recall < 1.0
+    //      at any fixed nProbe < lists
     //      (unlike multi-probe SRP, which reaches 1.0 and carries the
     //      exact oracle). The recall floor is pinned by
     //      q_ann_ivf_recall_guard below.
@@ -2510,10 +2520,10 @@ object SparkEntry {
           |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
           |  FROM scored) WHERE rank <= 5""".stripMargin,
       // multi-probe SRP-LSH has measured recall 1.0 on both driver
-      // corpora (tools/ApproxParityProbe: output == brute force at
-      // sf0.01 AND sf0.1), so it carries the same brute-force oracle —
-      // a recall regression turns the row red instead of hiding behind
-      // no_oracle
+      // corpora (tools/ApproxParityProbe at commit 5b261a9: output ==
+      // brute force at sf0.01 AND sf0.1), so it carries the same
+      // brute-force oracle — a recall regression turns the row red
+      // instead of hiding behind no_oracle
       "q_ann_lsh" ->
         """WITH q AS (SELECT vec_id AS query_id, embedding AS q_vec FROM embeddings WHERE label = 0 ORDER BY vec_id LIMIT 20),
           |scored AS (

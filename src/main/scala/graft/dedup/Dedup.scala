@@ -86,8 +86,6 @@ object Dedup {
       rowsPerBand = rowsPerBand,
       jaccardThreshold = threshold
     )
-    val base = df.select(col(idCol).cast("long"), col(textCol).cast("string")).as[(Long, String)]
-
     // Shuffle-narrow plan: the shingle arrays (the wide payload — a
     // document's whole shingle set) NEVER ride a shuffle. The band
     // explode and the candidate self-join move only (band, bh, id);
@@ -151,19 +149,10 @@ object Dedup {
     * NO pairs; unlike the crossJoin it never materializes the pair
     * space (candidate volume shrinks as t rises).
     *
-    * Ordering knob (`frequencyOrdered`): ascending corpus document
-    * frequency (rarest first, ties by hash) is the standard AllPairs
-    * selectivity order — prefixes then carry each document's RAREST
-    * shingles. Measured on the sf0.1 corpus it cuts candidates 1.6x
-    * (697k -> 439k) but pays a df-count pass + broadcast + re-sort,
-    * a net LOSS when verification isn't the bottleneck — so the
-    * default is plain hash order. Enable it when the corpus is large
-    * enough that candidate verification dominates (the df pass is one
-    * narrow aggregation that amortizes at scale); the df map is
-    * bounded — only shingles in >1 document matter (df=1 can't
-    * generate a candidate), capped at `maxFreqMapSize`, and uncapped
-    * shingles fall back to (1, hash), keeping the TOTAL order
-    * consistent and the join recall-complete at any cap.
+    * The order is plain ascending hash order. The AllPairs
+    * rarest-first (document-frequency) order cut sf0.1 candidates 1.6x
+    * (697k -> 439k) but its df-count pass, broadcast and re-sort made
+    * it a net loss where verification is not the bottleneck.
     */
   def jaccardPairsExact(
       spark: SparkSession,
@@ -171,53 +160,21 @@ object Dedup {
       idCol: String,
       textCol: String,
       shingleN: Int,
-      threshold: Double,
-      frequencyOrdered: Boolean = false,
-      maxFreqMapSize: Int = 1000000
+      threshold: Double
   ): DataFrame = {
     import spark.implicits._
 
-    // Default (hash-ordered) path: shingling + ordering + prefix
-    // explode are all native codegen expressions — no encoder
-    // round-trips, the whole pre-join side is one WholeStageCodegen
-    // span over the scan. sortBy((freq=1, s)) of the typed form
-    // degenerates to a plain ascending sort when no frequency map is
-    // loaded, i.e. array_sort.
-    val shingled =
-      if (!frequencyOrdered)
-        df.select(
-          col(idCol).cast("long").as("id"),
-          array_sort(graft.functions.TextExpressions
-            .word_shingles(col(textCol).cast("string"), shingleN)).as("sh"))
-      else {
-        val base = df.select(col(idCol).cast("long"), col(textCol).cast("string")).as[(Long, String)]
-        val shingledRaw = base
-          .map { case (id, t) => (id, wordShingles(t, shingleN)) }
-          .toDF("id", "sh")
-        val freq: Map[Long, Long] = shingledRaw
-          .select(explode($"sh").as("s"))
-          .groupBy($"s")
-          .agg(count(lit(1)).as("df"))
-          .where($"df" > 1)
-          .orderBy($"df".desc, $"s".asc)
-          .limit(maxFreqMapSize)
-          .as[(Long, Long)]
-          .collect()
-          .toMap
-        val bcFreq = spark.sparkContext.broadcast(freq)
-        shingledRaw
-          .as[(Long, Array[Long])]
-          .map { case (id, sh) =>
-            val f = bcFreq.value
-            (id, sh.sortBy(s => (f.getOrElse(s, 1L), s)))
-          }
-          .toDF("id", "sh")
-      }
+    // shingling + ordering + prefix explode are all native codegen
+    // expressions — no encoder round-trips, the whole pre-join side is
+    // one WholeStageCodegen span over the scan
+    val shingled = df.select(
+      col(idCol).cast("long").as("id"),
+      array_sort(graft.functions.TextExpressions
+        .word_shingles(col(textCol).cast("string"), shingleN)).as("sh"))
 
     // prefix length p = |S| - ceil(t*|S|) + 1 (the -1e-9 guards float
     // noise on exact integers; a LONGER prefix is always still
-    // recall-complete), min 1 — same formula as the typed form, as a
-    // scan-side posexplode over the slice
+    // recall-complete), min 1 — a scan-side posexplode over the slice
     val pLen = greatest(
       (size($"sh") - ceil(lit(threshold) * size($"sh") - lit(1e-9)).cast("int") + lit(1)),
       lit(1))
@@ -264,28 +221,10 @@ object Dedup {
     * policy: drop every document that has an above-threshold pair with
     * a smaller id. (The transitive-closure policy is CC + min-id — the
     * KG pipeline's canonicalization; this pairwise policy is the common
-    * streaming-friendly variant, and is exactly SQL-expressible, so the
-    * whole exact-join + dedup composition gets a hard oracle.) Plan:
-    * prefix-filtered exact join → distinct larger-side ids → one
-    * anti-join.
-    */
-  def nearDupSurvivors(
-      spark: SparkSession,
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      threshold: Double
-  ): DataFrame =
-    nearDupSurvivorsFromPairs(
-      df,
-      jaccardPairsExact(spark, df, idCol, textCol, shingleN, threshold),
-      idCol
-    )
-
-  /** Survivors from an already-computed pair table (id_a < id_b) —
-    * lets callers that also consume the pairs run the expensive join
-    * once: one distinct + one anti-join here.
+    * streaming-friendly variant, and is exactly SQL-expressible.) Takes
+    * an already-computed pair table (id_a < id_b), e.g. from
+    * [[jaccardPairsExact]], so callers that also consume the pairs run
+    * the expensive join once: one distinct + one anti-join here.
     */
   def nearDupSurvivorsFromPairs(df: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
     val dominated = pairs.select(col("id_b").as(idCol)).distinct()

@@ -24,12 +24,4 @@ object Geo {
         cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dLon / 2), 2)
     lit(2.0 * EarthRadiusMeters) * atan2(sqrt(a), sqrt(lit(1.0) - a))
   }
-
-  /** F3: Euclidean distance. */
-  def euclidean(dx: Column, dy: Column): Column = sqrt(pow(dx, 2) + pow(dy, 2))
-
-  /** F5: center-of-cell grid quantization `round(x/res)*res`
-    * (/root/reference/src/TCXParser.jl:270).
-    */
-  def gridQuantize(c: Column, res: Double): Column = round(c / lit(res), 0) * lit(res)
 }

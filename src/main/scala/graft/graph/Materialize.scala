@@ -362,14 +362,6 @@ object Materialize {
     val edgesPath = s"$outDir/edges"
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // backstop for pre-layout-field tables: a batch_id= dir under
-    // edges/ means the streaming layout — renaming its children would
-    // break partition discovery for every subsequent read
-    val edgesDir = new org.apache.hadoop.fs.Path(edgesPath)
-    if (fs.exists(edgesDir)) {
-      require(!fs.listStatus(edgesDir).exists(_.getPath.getName.startsWith("batch_id=")),
-        s"upsertColumns pointed at a batched-layout table ($edgesPath contains batch_id= dirs)")
-    }
     // the table's RECORDED bucket count wins over the parameter — an
     // upsert bucketing with a different modulus would prune the wrong
     // partitions and silently no-op the updates
@@ -471,18 +463,14 @@ object Materialize {
     * runtime jar — SURVEY §7.0 — so the layout carries its own
     * manifest): data files + row counters per table, one JSON per
     * snapshot. Readers can diff manifests for incremental consumption.
-    */
-  def writeManifest(spark: SparkSession, outDir: String): String =
-    writeManifest(spark, outDir, None)
-
-  /** [[writeManifest]] with the row counters supplied by a caller that
-    * already computed [[stats]] — avoids re-running the heal pass and
-    * the two count jobs when the manifest write follows a stats call.
+    * A caller that already computed [[stats]] passes them as
+    * `precomputedStats`, which skips a second heal pass and the two
+    * count jobs.
     */
   def writeManifest(
       spark: SparkSession,
       outDir: String,
-      precomputedStats: Option[(Long, Long)]
+      precomputedStats: Option[(Long, Long)] = None
   ): String = {
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

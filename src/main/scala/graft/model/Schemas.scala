@@ -18,20 +18,6 @@ final case class Turn(
     ts: Timestamp
 )
 
-/** One detected entity mention inside a turn (graft of the reference's
-  * per-point road-feature assignment, /root/reference/src/TCXParser.jl:188-203).
-  * `entity_id` is the *surface-form* entity id (pre-canonicalization);
-  * resolution to a canonical id happens in the CC stage.
-  */
-final case class Mention(
-    conv_id: String,
-    turn_idx: Int,
-    entity_id: Long,
-    surface: String,
-    begin: Int,
-    end: Int
-)
-
 /** A (subj, pred, obj) triple with provenance, pre-canonicalization.
   * Mirrors the reference's consecutive-record edge with properties
   * (/root/reference/src/GraphBuilder.jl:109-111) generalized to typed

@@ -79,25 +79,17 @@ object KGPipeline {
       spark: SparkSession,
       turns: Dataset[Turn],
       dict: Seq[SurfaceForm],
-      lsh: Linker.LshConfig = Linker.LshConfig(),
-      persistSource: Boolean = false
+      lsh: Linker.LshConfig = Linker.LshConfig()
   ): Result = {
     import spark.implicits._
 
     val bc = spark.sparkContext.broadcast(dict.toArray)
     // P1: drop records with null payload, the reference's null-position
-    // filter (/root/reference/src/TCXParser.jl:58)
-    // persistSource: the turn stream feeds TWO full passes (the
-    // triple extraction and the observed-ids vocabulary scan); for a
-    // driver-sized / generated corpus, pinning the flat (conv, idx,
-    // text) rows pays one generation instead of two. Default OFF: at
-    // 10^12 turns the source is a table whose re-scan is the normal
-    // plan, and pinning it would not fit executor storage.
-    val validTurns0 = turns.filter((t: Turn) => t.text != null)
-    val validTurns =
-      if (persistSource)
-        validTurns0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else validTurns0
+    // filter (TCXParser.jl:58 in the Julia reference). The turn stream
+    // feeds two full passes (the triple extraction and the observed-ids
+    // scan); a caller whose source is expensive to recompute (a
+    // generated corpus) persists it before the call.
+    val validTurns = turns.filter((t: Turn) => t.text != null)
     // Edges consume the extraction's triples; vertices consume only the
     // observed ids, from their own narrow scan. The extraction is not
     // cached: it is a cheap narrow map (~2M turns/s/8 cores), while

@@ -18,18 +18,6 @@ object TextOps {
     when(length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** Word-ish token count with a BPE-ish regex (letters / digits /
-    * single punctuation runs count separately) — the "token budget"
-    * estimator of data pipelines.
-    */
-  def bpeishTokenCount(text: Column): Column =
-    size(
-      filter(
-        split(text, "(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])"),
-        t => length(trim(t)) > 0
-      )
-    )
-
   /** Marker words per language for the heuristic language ID. Tiny by
     * design: the operator shape (per-language evidence count + argmax)
     * is what scales, the lexicon is a pluggable dimension.
@@ -47,13 +35,10 @@ object TextOps {
     size(filter(toks, t => array_contains(arr, t)))
   }
 
-  /** Heuristic language ID: per-language stopword evidence, argmax with
+  /** Heuristic language ID over a pre-split token array (share the
+    * split across consumers — the split dominates the cost of the
+    * annotate pass): per-language stopword evidence, argmax with
     * deterministic first-wins tie-break ("unknown" if nothing matches).
-    */
-  def langId(text: Column): Column = langIdTok(split(lower(text), "\\s+"))
-
-  /** langId over a pre-split token array (share the split across
-    * consumers — the split dominates the cost of the annotate pass).
     */
   def langIdTok(toks: Column): Column = {
     val scored = LangMarkers.map { case (lang, ms) => (lang, markerHitsTok(toks, ms)) }

@@ -162,8 +162,8 @@ class DedupAnnSpec extends SparkSpec {
   test("prefix-filtered exact Jaccard join equals the crossJoin oracle exactly") {
     import spark.implicits._
     val c = corpusWithClips
-    for ((t, freqOrdered) <- Seq((0.4, false), (0.6, true), (0.8, false))) {
-      val got = Dedup.jaccardPairsExact(spark, c, "doc_id", "text", 3, t, frequencyOrdered = freqOrdered)
+    for (t <- Seq(0.4, 0.6, 0.8)) {
+      val got = Dedup.jaccardPairsExact(spark, c, "doc_id", "text", 3, t)
         .as[(Long, Long, Double)].collect().toSet
       val want = Dedup.exactJaccardPairs(spark, c, "doc_id", "text", 3, t)
         .as[(Long, Long, Double)].collect().toSet

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.EntityAggregates
 import graft.graph.Materialize
-import graft.multimodal.BinaryOps
 import graft.path.EntityPaths
 
 class ModulesSpec extends SparkSpec {
@@ -181,169 +180,6 @@ class ModulesSpec extends SparkSpec {
     assert(Materialize.healBucketSwaps(spark, bucketed) == 1)
     assert(spark.read.parquet(s"$bucketed/edges").count() == 2)
     assert(Materialize.healBucketSwaps(spark, bucketed) == 0) // idempotent
-  }
-
-  test("multimodal: batched feature extraction is deterministic with real plumbing") {
-    import spark.implicits._
-    val media = BinaryOps.syntheticMedia(spark, 40, 512)
-    val feats = BinaryOps.extractFeatures(spark, media)
-    assert(feats.count() == 40)
-    // determinism at different parallelism
-    val a = feats.collect().sortBy(_.media_id).map(f => (f.media_id, f.checksum, f.features.toSeq))
-    val b = BinaryOps
-      .extractFeatures(spark, media.repartition(7))
-      .collect()
-      .sortBy(_.media_id)
-      .map(f => (f.media_id, f.checksum, f.features.toSeq))
-    assert(a.sameElements(b))
-    assert(a.forall(_._3.length == BinaryOps.FeatureDim))
-    val stats = BinaryOps.featureStatsByType(media, feats)
-    assert(stats.count() == 3) // three media types
-    assert(stats.agg(sum($"n_media")).head().getLong(0) == 40)
-
-    // image rows went through the REAL ImageIO decode: marker feature
-    // set, quadrant means are genuine [0,1] pixel averages, and the
-    // recorded dims match the encoded 16x16
-    val imageIds = media.collect().filter(_.meta.mediaType == "image/png").map(_.media_id).toSet
-    assert(imageIds.nonEmpty)
-    val imgFeats = a.filter(f => imageIds.contains(f._1)).map(_._3)
-    assert(imgFeats.forall(f => f(15) == 1.0f && f(13) == 16 / 256.0f && f(14) == 16 / 256.0f))
-    assert(imgFeats.forall(f => (0 until 12).forall(i => f(i) >= 0f && f(i) <= 1f)))
-    // audio rows went through the REAL javax.sound decode: marker set,
-    // mono PCM at 8 kHz, genuine RMS of the synthesized 12000-amp sine
-    val audioIds = media.collect().filter(_.meta.mediaType == "audio/wav").map(_.media_id).toSet
-    assert(audioIds.nonEmpty)
-    val wavFeats = a.filter(f => audioIds.contains(f._1)).map(_._3)
-    assert(wavFeats.forall(f => f(15) == 1.0f && f(14) == 1.0f && f(13) == 8000 / 48000.0f))
-    val sineRms = 12000.0 / 32768.0 / math.sqrt(2.0)
-    assert(wavFeats.forall(f => math.abs(f(8) - sineRms) < 0.02))
-    // video rows went through the REAL AVI/MJPEG decode: marker set,
-    // 16-wide frames, 4 frames per container, genuine [0,1] pixel means
-    val videoIds = media.collect().filter(_.meta.mediaType == "video/avi").map(_.media_id).toSet
-    assert(videoIds.nonEmpty)
-    val vidFeats = a.filter(f => videoIds.contains(f._1)).map(_._3)
-    assert(vidFeats.forall(f => f(15) == 1.0f && f(13) == 16 / 256.0f && f(14) == 4 / 256.0f))
-    assert(vidFeats.forall(f => (0 until 12).forall(i => f(i) >= 0f && f(i) <= 1f)))
-  }
-
-  test("multimodal: WAV decode extracts exact signal features") {
-    // 1 kHz sine at 8 kHz, amplitude 12000: RMS = A/sqrt(2), ZCR = 2f/sr
-    val sr = 8000
-    val sine = Array.tabulate(800)(i => (math.sin(2 * math.Pi * 1000.0 * i / sr) * 12000).toShort)
-    val f = BinaryOps.WavCodec.decodeAndFeaturize(BinaryOps.WavCodec.encode(sine, sr)).get
-    assert(math.abs(f(8) - 12000.0 / 32768.0 / math.sqrt(2.0)) < 0.005)
-    assert(math.abs(f(9) - 2 * 1000.0 / sr) < 0.01)
-    assert(math.abs(f(10) - 12000.0 / 32768.0) < 0.01) // peak
-    assert(f(13) == sr / 48000.0f && f(14) == 1.0f && f(15) == 1.0f)
-    // silence: zero RMS/ZCR/peak
-    val z = BinaryOps.WavCodec.decodeAndFeaturize(
-      BinaryOps.WavCodec.encode(new Array[Short](100), sr)).get
-    assert(z(8) == 0f && z(9) == 0f && z(10) == 0f)
-    // garbage bytes are not audio
-    assert(BinaryOps.WavCodec.decodeAndFeaturize(Array[Byte](9, 9, 9, 9)).isEmpty)
-  }
-
-  test("multimodal: PNG decode extracts exact pixel features (solid color)") {
-    // solid red 4x4: every quadrant mean = (1, 0, 0); luminance 0.299
-    val png = BinaryOps.PngCodec.encode(4, 4, (_, _) => 0xff0000)
-    val f = BinaryOps.PngCodec.decodeAndFeaturize(png).get
-    for (q <- 0 until 4) {
-      assert(f(q * 3) == 1.0f)
-      assert(f(q * 3 + 1) == 0.0f && f(q * 3 + 2) == 0.0f)
-    }
-    assert(math.abs(f(12) - 0.299f) < 1e-6)
-    assert(f(13) == 4 / 256.0f && f(14) == 4 / 256.0f && f(15) == 1.0f)
-    // quadrant separation: top-left white, rest black on 2x2
-    val png2 = BinaryOps.PngCodec.encode(2, 2, (x, y) => if (x == 0 && y == 0) 0xffffff else 0)
-    val f2 = BinaryOps.PngCodec.decodeAndFeaturize(png2).get
-    assert(f2(0) == 1.0f && f2(1) == 1.0f && f2(2) == 1.0f)
-    assert((3 until 12).forall(i => f2(i) == 0.0f))
-    // garbage bytes are not an image
-    assert(BinaryOps.PngCodec.decodeAndFeaturize(Array[Byte](1, 2, 3, 4)).isEmpty)
-  }
-
-  test("multimodal: resize really resamples pixels; frame sampling emits real frames") {
-    val media = BinaryOps.syntheticMedia(spark, 30, 512) // avi 16x16x4f; png 16x16; wav no dims
-    val srcRows = media.collect().map(r => r.media_id -> r).toMap
-    val resized = BinaryOps.resize(spark, media, 32, 32).collect()
-    assert(resized.length == 30)
-    assert(resized.forall { r =>
-      val src = srcRows(r.media_id)
-      if (src.meta.width.toLong * src.meta.height == 0L)
-        r.meta == src.meta && r.payload.length == src.payload.length // audio untouched
-      else r.meta.width == 32 && r.meta.height == 32
-    })
-    // PNG rows: payload is a REAL 32x32 PNG whose pixels are the
-    // nearest-neighbor map of the source (exact for 16->32: each source
-    // pixel becomes a 2x2 block)
-    val pngResized = resized.filter(r => srcRows(r.media_id).meta.mediaType == "image/png")
-    assert(pngResized.nonEmpty)
-    pngResized.foreach { r =>
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-      val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(srcRows(r.media_id).payload))
-      assert(img.getWidth == 32 && img.getHeight == 32)
-      for (x <- 0 until 32; y <- Seq(0, 15, 31))
-        assert((img.getRGB(x, y) & 0xffffff) == (src.getRGB(x / 2, y / 2) & 0xffffff))
-    }
-    // video rows: payload is a rebuilt 32x32 MJPEG AVI with the same
-    // frame count and fps
-    val aviResized = resized.filter(r => srcRows(r.media_id).meta.mediaType == "video/avi")
-    assert(aviResized.nonEmpty)
-    aviResized.foreach { r =>
-      val Some((w, h, fps, fs)) = BinaryOps.AviMjpegCodec.decodeFrames(r.payload)
-      assert(w == 32 && h == 32 && fps == 4 && fs.length == 4)
-    }
-    // determinism under different partitioning
-    val again = BinaryOps.resize(spark, media.repartition(5), 32, 32)
-      .collect().sortBy(_.media_id).map(_.payload.toSeq)
-    assert(resized.sortBy(_.media_id).map(_.payload.toSeq).sameElements(again))
-
-    val frames = BinaryOps.sampleFrames(spark, media, everyMs = 300L, maxFrames = 3).collect()
-    val videos = media.collect().filter(_.meta.mediaType.startsWith("video/"))
-    assert(videos.nonEmpty)
-    // 1000ms / 300ms stride -> 4 samples uncapped, capped at 3
-    assert(frames.length == videos.length * 3)
-    assert(frames.forall(f => f.ts_ms == f.frame_idx * 300L))
-    assert(frames.map(_.media_id).distinct.length == videos.length)
-    // sampled frames are the REAL source JPEGs: ts 0/300/600 at 4 fps
-    // (250 ms/frame) map to source frames 0/1/2
-    val byId = videos.map(v => v.media_id -> BinaryOps.AviMjpegCodec.decodeFrames(v.payload).get._4).toMap
-    frames.foreach { f =>
-      assert(f.frame.toSeq == byId(f.media_id)(f.ts_ms.toInt / 250).toSeq)
-    }
-  }
-
-  test("multimodal: AVI/MJPEG container round-trips and rejects malformed payloads") {
-    // 3 distinguishable frames: solid red / green / blue 8x8
-    val colors = Seq(0xff0000, 0x00ff00, 0x0000ff)
-    val frames = colors.map(c => BinaryOps.AviMjpegCodec.encodeJpegFrame(8, 8, (_, _) => c))
-    val avi = BinaryOps.AviMjpegCodec.encode(frames, 8, 8, 2)
-    val Some((w, h, fps, out)) = BinaryOps.AviMjpegCodec.decodeFrames(avi)
-    assert(w == 8 && h == 8 && fps == 2 && out.length == 3)
-    // frame payloads survive the container byte-for-byte (modulo the
-    // even-padding byte the spec requires)
-    out.zip(frames).foreach { case (got, want) =>
-      assert(got.take(want.length).toSeq == want.toSeq && got.length - want.length <= 1)
-    }
-    // decoded pixels match the dominant color per frame (JPEG is lossy
-    // but a solid color stays dominant)
-    out.zip(colors).foreach { case (jb, c) =>
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(jb))
-      val p = img.getRGB(4, 4)
-      val (r, g, b) = ((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
-      val dominant = Seq(r, g, b).zipWithIndex.maxBy(_._1)._2
-      val expected = Seq(0xff0000, 0x00ff00, 0x0000ff).indexOf(c)
-      assert(dominant == expected, s"frame color $c decoded to ($r,$g,$b)")
-    }
-    // features: marker + width + frame count, quadrant means near the
-    // per-frame colors' average (each channel dominant in 1 of 3 frames)
-    val f = BinaryOps.AviMjpegCodec.decodeAndFeaturize(avi).get
-    assert(f(15) == 1.0f && f(13) == 8 / 256.0f && f(14) == 3 / 256.0f)
-    assert((0 until 12).forall(i => f(i) > 0.2f && f(i) < 0.5f)) // ~1/3 each channel
-    // malformed payloads: truncated container, garbage, empty
-    assert(BinaryOps.AviMjpegCodec.decodeFrames(avi.take(20)).isEmpty)
-    assert(BinaryOps.AviMjpegCodec.decodeFrames(Array[Byte](1, 2, 3)).isEmpty)
-    assert(BinaryOps.AviMjpegCodec.decodeAndFeaturize("RIFFxxxxAVI not really".getBytes).isEmpty)
   }
 
   test("materialize: lineage resume skips completed buckets, counts preserved") {
